@@ -170,13 +170,8 @@ def _q_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         table,
         # uniform derived keys → every batch touches every bucket: skip
-        # the prune pre-pass, and align the merge shuffle with the
-        # table's bucket layout (bucket_local_merge — ONE exchange
-        # feeds both the LWW aggregate and the per-bucket write; the
-        # hot-key caveat in the merge_cdc docstring does not apply to
-        # a uniform log)
-        config=EngineConfig(batch_lsn_size=batch, lineage=False, prune_buckets=False,
-                            bucket_local_merge=True),
+        # the prune pre-pass
+        config=EngineConfig(batch_lsn_size=batch, lineage=False, prune_buckets=False),
     )
 
     def slicer(lo: int, hi_: int) -> DataFrame:
@@ -185,44 +180,6 @@ def _q_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng.replay(slicer, lsn_lo=0, lsn_hi=int(hi))
     out = table.read()
     return out.select(
-        "conv_id", "turn_idx", "role", "text", "tool", _fmt_ts("ts")
-    )
-
-
-def _q_bucket_local_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship replay under the single-exchange merge
-    (`bucket_local_merge=True`): the bucket-aligned shuffle feeds both
-    the LWW aggregate and the per-bucket write, replacing the default
-    key-exchange + re-bucket plan — the round-5 bulk-throughput
-    configuration. Same oracle as cdc_replay_final_state: final state
-    is identical by contract (also pinned by
-    test_bucket_local_merge_equals_default)."""
-    from neosync_spark.engine import EngineConfig, ReplayEngine
-    from neosync_spark.lakehouse import SnapshotTable
-    from neosync_spark.schema import KEY_COLS, transcript_schema
-
-    log = _derived_log(spark, sf_dir)
-    hi = _log_hi(spark, sf_dir)
-    batch = max(1000, (int(hi) + 4) // 4)
-
-    path = tempfile.mkdtemp(prefix="ns_cdc_blm_")
-    table = SnapshotTable.create(
-        spark, path, transcript_schema(), key_cols=KEY_COLS, n_buckets=16
-    )
-    eng = ReplayEngine(
-        spark,
-        table,
-        config=EngineConfig(
-            batch_lsn_size=batch, lineage=False, prune_buckets=False,
-            bucket_local_merge=True,
-        ),
-    )
-
-    def slicer(lo: int, hi_: int) -> DataFrame:
-        return log.filter((F.col("lsn") >= lo) & (F.col("lsn") < hi_))
-
-    eng.replay(slicer, lsn_lo=0, lsn_hi=int(hi))
-    return table.read().select(
         "conv_id", "turn_idx", "role", "text", "tool", _fmt_ts("ts")
     )
 
@@ -390,7 +347,6 @@ def _q_cdc_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=int(hi) + 1, lineage=False, prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         ),
     )
     eng.replay(
@@ -631,9 +587,9 @@ def _q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema, key_cols=["conv_id"], n_buckets=16,
     )
     # uniform derived keys hash across every accumulator bucket:
-    # skip the bucket-listing job + merge pre-pass, single-exchange
-    # merge (see the flagship note)
-    tune = dict(prune_buckets=False, bucket_local_merge=True)
+    # skip the bucket-listing job + merge pre-pass (see the flagship
+    # note)
+    tune = dict(prune_buckets=False)
     merge_agg(t, inc.filter(F.col("lsn") < mid), resolvers,
               applied_range=(0, mid), **tune)
     merge_agg(t, inc.filter(F.col("lsn") >= mid), resolvers,
@@ -880,7 +836,6 @@ def _q_secondary_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         cfg = EngineConfig(
             batch_lsn_size=hi_ - lo + 1, lineage=False,
             prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         )
         ReplayEngine(spark, table, config=cfg).replay(
             lambda a, b: log.filter(
@@ -961,7 +916,6 @@ def _q_debezium_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         cfg = EngineConfig(
             batch_lsn_size=hi_ - lo + 1, lineage=False,
             prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         )
         ReplayEngine(spark, primary, config=cfg).replay(
             lambda a, b: log.filter(
@@ -1655,8 +1609,7 @@ def _q_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     def slicer(lo: int, hi_: int) -> DataFrame:
         return log.filter((F.col("lsn") >= lo) & (F.col("lsn") < hi_))
 
-    cfg = dict(lineage=False, prune_buckets=False,
-               bucket_local_merge=True)  # uniform keys (see flagship)
+    cfg = dict(lineage=False, prune_buckets=False)  # uniform keys (see flagship)
     ReplayEngine(
         spark, table, config=EngineConfig(batch_lsn_size=mid, **cfg)
     ).replay(slicer, lsn_lo=0, lsn_hi=mid - 1)
@@ -1718,9 +1671,8 @@ def _q_scd2_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             key_cols=keys,
             attr_cols=attrs,
             # uniform derived keys touch most dim buckets every epoch:
-            # skip the prune pre-pass, single-exchange merge
+            # skip the prune pre-pass
             prune_buckets=False,
-            bucket_local_merge=True,
         )
     # exactly-once: replaying the second epoch must not commit
     sid = dim.manifest(refresh=True)["snapshot_id"]
@@ -1766,8 +1718,7 @@ def _q_ledger_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     def slicer(lo: int, hi_: int) -> DataFrame:
         return log.filter((F.col("lsn") >= lo) & (F.col("lsn") < hi_))
 
-    cfg = dict(lineage=False, prune_buckets=False,
-               bucket_local_merge=True)  # uniform keys (see flagship)
+    cfg = dict(lineage=False, prune_buckets=False)  # uniform keys (see flagship)
     step = max(mid // 4, 1)
     ReplayEngine(
         spark, table, config=EngineConfig(batch_lsn_size=step, **cfg)
@@ -1815,8 +1766,7 @@ def _q_rollback_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     def slicer(lo: int, hi_: int) -> DataFrame:
         return log.filter((F.col("lsn") >= lo) & (F.col("lsn") < hi_))
 
-    cfg = dict(lineage=False, prune_buckets=False,
-               bucket_local_merge=True)  # uniform keys (see flagship)
+    cfg = dict(lineage=False, prune_buckets=False)  # uniform keys (see flagship)
     ReplayEngine(
         spark, table, config=EngineConfig(batch_lsn_size=mid, **cfg)
     ).replay(slicer, lsn_lo=0, lsn_hi=mid - 1)
@@ -1901,8 +1851,7 @@ def _q_rescale_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     def slicer(lo: int, hi_: int) -> DataFrame:
         return log.filter((F.col("lsn") >= lo) & (F.col("lsn") < hi_))
 
-    cfg = dict(lineage=False, prune_buckets=False,
-               bucket_local_merge=True)  # uniform keys (see flagship)
+    cfg = dict(lineage=False, prune_buckets=False)  # uniform keys (see flagship)
     ReplayEngine(
         spark, table, config=EngineConfig(batch_lsn_size=mid, **cfg)
     ).replay(slicer, lsn_lo=0, lsn_hi=mid - 1)
@@ -1941,9 +1890,6 @@ def _q_stats_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=batch, lineage=False, merge_mode="mor",
-            # uniform keys: skip the prune pre-pass and keep the delta
-            # write on one bucket-aligned exchange (see flagship)
-            prune_buckets=False, bucket_local_merge=True,
         ),
     )
 
@@ -2349,7 +2295,6 @@ def _q_txn_boundary_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_lsn_size=max(1000, (cut + 4) // 4),  # windows cut mid-txn
             lineage=False,
             prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
             txn_cols=("txn_id", "txn_total"),
         ),
     )
@@ -2392,21 +2337,18 @@ def _q_consistent_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = _mk("raw")
     ReplayEngine(
         spark, raw,
-        config=EngineConfig(batch_lsn_size=b, lineage=False, prune_buckets=False,
-                           bucket_local_merge=True),  # uniform keys
+        config=EngineConfig(batch_lsn_size=b, lineage=False, prune_buckets=False),
     ).replay(slicer, lsn_lo=0, lsn_hi=hi)
     # replica commits on a coarser grid, cadence changing mid-stream
     # (2b then b), and its tail is NOT yet applied — boundaries {2b, 3b}
     replica = _mk("replica")
     ReplayEngine(
         spark, replica,
-        config=EngineConfig(batch_lsn_size=2 * b, lineage=False, prune_buckets=False,
-                           bucket_local_merge=True),  # uniform keys
+        config=EngineConfig(batch_lsn_size=2 * b, lineage=False, prune_buckets=False),
     ).replay(slicer, lsn_lo=0, lsn_hi=2 * b - 1)
     ReplayEngine(
         spark, replica,
-        config=EngineConfig(batch_lsn_size=b, lineage=False, prune_buckets=False,
-                           bucket_local_merge=True),  # uniform keys
+        config=EngineConfig(batch_lsn_size=b, lineage=False, prune_buckets=False),
     ).replay(slicer, lsn_lo=2 * b, lsn_hi=3 * b - 1)
     tables = {"raw": raw, "replica": replica}
 
@@ -2461,7 +2403,6 @@ def _q_bootstrap_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         config=EngineConfig(
             batch_lsn_size=max(1000, (hi - resume + 4) // 4),
             lineage=False, prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         ),
     )
     return table.read().select(
@@ -2628,7 +2569,6 @@ def _q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=max(1, mid), lineage=False, prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         ),
     )
 
@@ -2684,7 +2624,6 @@ def _q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         src,
         config=EngineConfig(
             batch_lsn_size=max(1, mid), lineage=False, prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         ),
     )
 
@@ -2740,7 +2679,6 @@ def _q_cdc_profile_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         src,
         config=EngineConfig(
             batch_lsn_size=max(1, mid), lineage=False, prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         ),
     )
 
@@ -5114,7 +5052,6 @@ def _q_sft_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=hi + 2, lineage=False, prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         ),
     )
 
@@ -5375,7 +5312,6 @@ def _q_zorder_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=batch, lineage=False, prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         ),
     )
 
@@ -5539,7 +5475,6 @@ def _q_dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=hi + 2, lineage=False, prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         ),
     )
 
@@ -5579,7 +5514,6 @@ def _q_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=hi + 2, lineage=False, prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         ),
     )
 
@@ -5644,7 +5578,6 @@ def _q_scoped_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         transform_where={"text": "role = 'user'"},
         config=EngineConfig(
             batch_lsn_size=hi + 2, lineage=False, prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         ),
     )
 
@@ -5723,9 +5656,6 @@ def _q_bloom_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=batch, lineage=False, merge_mode="mor",
-            # uniform keys: skip the prune pre-pass and keep the delta
-            # write on one bucket-aligned exchange (see flagship)
-            prune_buckets=False, bucket_local_merge=True,
         ),
     )
 
@@ -5765,7 +5695,6 @@ def _q_changefeed_images(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=max(1, mid), lineage=False, prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         ),
     )
 
@@ -5884,7 +5813,6 @@ def _q_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=hi + 2, lineage=False, prune_buckets=False,
-            bucket_local_merge=True,  # uniform keys (see flagship)
         ),
     )
 
@@ -5950,7 +5878,6 @@ def _q_retention_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=hi + 2, lineage=False, merge_mode="mor",
-            prune_buckets=False, bucket_local_merge=True,  # uniform keys
         ),
     )
 
@@ -6163,7 +6090,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "media_audio_features": _q_audio_features,
         "cdc_replay_final_state": _q_cdc_replay,
         "cdc_merge_upsert": _q_merge_upsert,
-        "cdc_bucket_local_merge": _q_bucket_local_merge,
         "job_js_sync": _q_job_js_sync,
         "job_jq_sync": _q_job_jq_sync,
         "transcript_sft_sync": _q_sft_sync,
@@ -6345,12 +6271,6 @@ def _oracle_sql_base() -> dict[str, str]:
         """,
         # 12 MoR epochs: state == flagship fold; segment spill asserted in-query
         "cdc_manifest_segments": f"""
-            SELECT conv_id, turn_idx, role, text, tool,
-                   strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
-            FROM ({lww}) WHERE op <> 'delete'
-        """,
-        # single-exchange merge: identical final state by contract
-        "cdc_bucket_local_merge": f"""
             SELECT conv_id, turn_idx, role, text, tool,
                    strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
             FROM ({lww}) WHERE op <> 'delete'

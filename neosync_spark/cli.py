@@ -2034,8 +2034,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0 if not rep["damaged"] else 1
 
     if args.cmd == "repair":
-        from pyspark.sql import functions as F
-
         from .lakehouse import SnapshotTable
         from .plans.job import resolve_transformer
 
@@ -2049,26 +2047,12 @@ def main(argv: list[str] | None = None) -> int:
                 return 0
         transform = None
         if args.mapping:
-            from .functions.transformers import as_udf, key_col
-            from .schema import KEY_COLS
+            from .engine import ReplayEngine
 
-            transforms = {
+            transform = ReplayEngine(spark, t, transforms={
                 mp.column: resolve_transformer(mp, args.seed)
                 for mp in _parse_mapping(args.mapping)
-            }
-
-            def transform(df, _tx=transforms):
-                k = key_col(*KEY_COLS)
-                out = df
-                for col, fn in _tx.items():
-                    if col in out.columns:
-                        expr = getattr(fn, "column_expr", None)
-                        out = out.withColumn(
-                            col,
-                            expr(F.col(col)) if expr
-                            else as_udf(fn)(F.col(col), k),
-                        )
-                return out
+            }).transform_batch
 
         excl = None
         if args.exclude_key:

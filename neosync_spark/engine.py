@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from .functions.transformers import TransformFn, as_udf, key_col
 from .lakehouse import CommitInfo, SnapshotTable
 from .operators.dedup import lww_dedup
-from .operators.skew import salted_repartition
 from .operators.txn import txn_safe_boundary
 from .schema import KEY_COLS
 from .schema_registry import SchemaRegistry, ensure_table_schema
@@ -39,8 +38,6 @@ from .sources.changelog import ChangeLogSource
 @dataclass
 class EngineConfig:
     batch_lsn_size: int = 500_000
-    salt_partitions: int | None = None  # pre-transform fan-out; None = skip
-    salt_buckets: int = 8
     lineage: bool = True
     # 'cow' = north-rule copy-on-write MERGE commits;
     # 'mor' = merge-on-read delta commits (O(batch) write amplification,
@@ -49,45 +46,25 @@ class EngineConfig:
     # under 'mor': compact buckets whose delta-file count exceeds this
     # (checked after each batch); None disables auto-compaction
     compact_deltas_over: int | None = 8
-    # False: skip the per-batch bucket-stats pre-pass (one fewer scan) —
-    # right when batch keys hit most buckets anyway (uniform keys);
-    # keep True for key-local update streams so merges stay bucket-pruned
+    # under 'cow': False skips the per-batch bucket-stats pre-pass (one
+    # fewer scan) — right when batch keys hit most buckets anyway
+    # (uniform keys); keep True for key-local update streams so merges
+    # stay bucket-pruned. MoR commits never run the pre-pass.
     prune_buckets: bool = True
     # quarantine poison rows (bad op / null key / null lsn) to
     # <table>/metadata/quarantine instead of failing the batch — the
     # analog of the reference's row-by-row retry skipping violations
     # (output_sql_insert.go:310-348) and error-output escape hatch
     quarantine: bool = False
-    # chain the persisted post-commit state into the next merge as its
-    # target (skips re-scanning the table's parquet every micro-batch).
-    # Requires cow + prune_buckets=False (the chained state must cover
-    # the whole table); invalidated automatically on schema evolution.
-    # Memory: holds one table-copy in executor cache — right when the
-    # hot working set fits (or spills) per executor.
-    chain_state: bool = False
     # row-level FK-violation skip (skip_foreign_key_violations,
     # output_sql_insert.go:310-348): rows whose FK tuple misses the
     # parent key set are quarantined to <table>/metadata/quarantine_fk
     # and counted; the rest of the batch applies normally
     fk_check: "FkCheck | None" = None
-    # narrow in-batch LWW + broadcast winner semi-join: payload crosses
-    # the wire once instead of once per duplicate event (see merge_cdc
-    # late_materialize for the wire math). Right when batches carry
-    # high per-key duplicate multiplicity and the per-batch DISTINCT
-    # key count fits a broadcast (~10^7); keep False for d ≈ 1 sources
-    # or giant-key-count bulk loads.
-    late_materialize: bool = False
     # partial row images: op='patch' sets only non-NULL columns (see
     # merge_cdc patch_ops — COW folds at write, MoR stores raw + folds
     # at read); requires the source slices to be raw event history
     patch_ops: bool = False
-    # align the merge shuffle with the table's bucket layout: ONE
-    # exchange on the bucket column serves both the LWW aggregate and
-    # the per-bucket write (see merge_cdc bucket_local_merge for the
-    # cluster-network rationale and the locally-measured-neutral note);
-    # keep False for skewed/hot-key sources (the combine collapses
-    # duplicates before the wire there)
-    bucket_local_merge: bool = False
     # (txn_id_col, txn_total_col): source-transaction-atomic apply for
     # commit-contiguous logs — every micro-batch end is snapped DOWN to
     # a transaction boundary (operators/txn.txn_safe_boundary) so no
@@ -168,7 +145,6 @@ class ReplayEngine:
         self.df_transform = df_transform
         self.registry = registry
         self.config = config or EngineConfig()
-        self._chained_state: DataFrame | None = None
         self._last_fk_skipped = 0
         self._fk_parent_keys: DataFrame | None = None
 
@@ -188,9 +164,7 @@ class ReplayEngine:
         Transformers carrying a ``column_expr`` (deterministic regex /
         string ops) run as JVM Column expressions inside whole-stage
         codegen; only seeded-random transformers pay the Arrow
-        round-trip into a pandas UDF. Row-local → safe to
-        salt-repartition on conv_id for hot-conversation splitting
-        before the (Python-bound) UDF stage.
+        round-trip into a pandas UDF.
 
         ``only_where`` (a boolean Column) asks for a SINGLE-PASS
         conditional apply: ``when(cond, mapped).otherwise(col)``. The
@@ -215,13 +189,6 @@ class ReplayEngine:
         if not self.transforms:
             return batch
         out = batch
-        if self.config.salt_partitions:
-            out = salted_repartition(
-                out,
-                "conv_id",
-                self.config.salt_partitions,
-                self.config.salt_buckets,
-            )
         k = key_col(*KEY_COLS)
         for col, fn in self.transforms.items():
             if col in out.columns:
@@ -411,11 +378,6 @@ class ReplayEngine:
                 _shutil.rmtree(qdir, ignore_errors=True)
             skipped.unpersist()
             self._last_fk_skipped = n_skip
-        chaining = (
-            self.config.chain_state
-            and self.config.merge_mode == "cow"
-            and not self.config.prune_buckets
-        )
         info = self.table.merge_cdc(
             batch,
             applied_range=applied_range,
@@ -428,18 +390,9 @@ class ReplayEngine:
             ),
             source_is_raw=True,
             prune_buckets=self.config.prune_buckets,
-            target_df=self._chained_state if chaining else None,
-            chain_state=chaining,
             patch_ops=self.config.patch_ops,
-            bucket_local_merge=self.config.bucket_local_merge,
-            late_materialize=self.config.late_materialize,
             on_conflict=self.config.on_conflict,
         )
-        if chaining:
-            prev = self._chained_state
-            self._chained_state = info.state
-            if prev is not None:
-                prev.unpersist()
         n_bad = 0
         if obs is not None:
             from .lakehouse import observation_metrics
@@ -576,10 +529,6 @@ class ReplayEngine:
                     renames=getattr(declared, "rename_map", None),
                 )
                 stats.schema_ops.extend(ops)
-                if ops and self._chained_state is not None:
-                    # schema changed: the cached state has stale columns
-                    self._chained_state.unpersist()
-                    self._chained_state = None
             info = self.apply_batch(slicer(lo, hi), (lo, hi))
             stats.batches_applied += 1
             stats.rows_applied += info.rows_written
@@ -653,9 +602,6 @@ class ReplayEngine:
                     renames=getattr(declared, "rename_map", None),
                 )
                 stats.schema_ops.extend(ops)
-                if ops and self._chained_state is not None:
-                    self._chained_state.unpersist()
-                    self._chained_state = None
             info = self.apply_batch(batch.drop(txn_col, total_col), (lo, hi))
             stats.batches_applied += 1
             stats.rows_applied += info.rows_written
@@ -766,8 +712,7 @@ class ReplayEngine:
         interruption point each quarantined row exists in at least one
         readable dir, and re-reading it twice is harmless (duplicates
         dropped, merge idempotent). A zero-heal requeue performs no
-        merge commit. Invalidates any chained COW state (the cached
-        target would be missing the healed rows).
+        merge commit.
         Returns {"requeued": n, "still_skipped": n}.
         """
         import glob
@@ -852,13 +797,8 @@ class ReplayEngine:
                     source_is_raw=True,
                     prune_buckets=self.config.prune_buckets,
                     patch_ops=self.config.patch_ops,
-                    bucket_local_merge=self.config.bucket_local_merge,
                     on_conflict=self.config.on_conflict,
                 )
-                if self._chained_state is not None:
-                    # the cached COW target predates the healed rows
-                    self._chained_state.unpersist()
-                    self._chained_state = None
         finally:
             if keys is not None:
                 keys.unpersist()

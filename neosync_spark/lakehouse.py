@@ -273,6 +273,8 @@ class BranchAuditError(RuntimeError):
 # structural — rebase refuses and the caller must recompute from the
 # new head.
 _REBASE_SAFE_OPS = {
+    # merge_mor_pipelined: older tables' label for pipelined delta
+    # commits (every MoR commit now records merge_mor)
     "merge_cow", "merge_mor", "merge_mor_pipelined", "compact", "retention",
 }
 
@@ -306,10 +308,6 @@ class CommitInfo:
     rows_written: int
     buckets_rewritten: int
     applied_range: tuple[int, int] | None
-    # populated when merge_cdc(chain_state=True): the persisted
-    # post-commit table state (storage cols + _bucket), identical to
-    # the files just written — usable as the next merge's target_df
-    state: "DataFrame | None" = None
     # replace_where only: count of new rows whose key collided with a
     # live row OUTSIDE the predicate region (the backfill deliberately
     # wins LWW against those too — a widening of Delta replaceWhere's
@@ -672,34 +670,7 @@ class SnapshotTable:
         (rewrites only, as RewriteConflictError) a consumed file no
         longer live at the head."""
         head = self.manifest(refresh=True)
-        planned_parent = new_m["parent"]
-        chain: list[dict] = []
-        cur = head
-        while cur["snapshot_id"] != planned_parent:
-            chain.append(cur)
-            p = cur.get("parent")
-            if p is None:
-                raise CommitConflictError(
-                    f"head snapshot {head['snapshot_id']} does not descend "
-                    f"from this commit's parent {planned_parent} (rollback "
-                    "or unrelated history) — recompute from the new head"
-                )
-            try:
-                cur = self.manifest(p)
-            except FileNotFoundError:
-                raise CommitConflictError(
-                    f"ancestry of head {head['snapshot_id']} below snapshot "
-                    f"{cur['snapshot_id']} was expired while rebasing — "
-                    "recompute from the new head"
-                ) from None
-        for c in chain:
-            op = (c.get("summary") or {}).get("operation")
-            if op not in _REBASE_SAFE_OPS:
-                raise CommitConflictError(
-                    f"concurrent {op!r} commit (snapshot {c['snapshot_id']}) "
-                    "is structural — rebase refused; recompute from the new "
-                    "head"
-                )
+        self._check_data_plane_since(head, new_m["parent"])
         if head["schema_id"] != new_m["schema_id"]:
             raise CommitConflictError(
                 f"schema advanced ({new_m['schema_id']} -> "
@@ -772,7 +743,7 @@ class SnapshotTable:
             "summary": {
                 **(new_m.get("summary") or {}),
                 "rebased_onto": head["snapshot_id"],
-                "planned_parent": planned_parent,
+                "planned_parent": new_m["parent"],
             },
         }
         # stats_cols only ever grows (compact --zorder adds clustered
@@ -781,6 +752,39 @@ class SnapshotTable:
             set(head.get("stats_cols", [])) | set(new_m.get("stats_cols", []))
         )
         return reb
+
+    def _check_data_plane_since(self, head: dict, parent_sid: int) -> None:
+        """Walk ``head`` back to snapshot ``parent_sid`` and raise
+        CommitConflictError unless every commit in between is
+        data-plane (``_REBASE_SAFE_OPS``) — the soundness condition for
+        landing work planned at ``parent_sid`` on top of ``head``."""
+        chain: list[dict] = []
+        cur = head
+        while cur["snapshot_id"] != parent_sid:
+            chain.append(cur)
+            p = cur.get("parent")
+            if p is None:
+                raise CommitConflictError(
+                    f"head snapshot {head['snapshot_id']} does not descend "
+                    f"from this commit's parent {parent_sid} (rollback "
+                    "or unrelated history) — recompute from the new head"
+                )
+            try:
+                cur = self.manifest(p)
+            except FileNotFoundError:
+                raise CommitConflictError(
+                    f"ancestry of head {head['snapshot_id']} below snapshot "
+                    f"{cur['snapshot_id']} was expired while rebasing — "
+                    "recompute from the new head"
+                ) from None
+        for c in chain:
+            op = (c.get("summary") or {}).get("operation")
+            if op not in _REBASE_SAFE_OPS:
+                raise CommitConflictError(
+                    f"concurrent {op!r} commit (snapshot {c['snapshot_id']}) "
+                    "is structural — rebase refused; recompute from the new "
+                    "head"
+                )
 
     # ---------- schema ----------
 
@@ -1467,12 +1471,8 @@ class SnapshotTable:
         transform=None,
         source_is_raw: bool = False,
         prune_buckets: bool = True,
-        target_df: DataFrame | None = None,
-        chain_state: bool = False,
         debug_assert_unique: bool = False,
         patch_ops: bool = False,
-        bucket_local_merge: bool = False,
-        late_materialize: bool = False,
         on_conflict: str = "fail",
         _retry_budget: int = 2,
     ) -> CommitInfo:
@@ -1490,7 +1490,10 @@ class SnapshotTable:
         DELTA files — no target read, O(batch) write amplification —
         with LWW resolved at read time / by compact(). The right mode
         for high-frequency tailing at 10^10 events; equivalent final
-        state (tests assert it).
+        state (tests assert it). A MoR commit is exactly
+        ``prepare_delta`` + ``commit_delta`` (no bucket pre-pass, so
+        ``prune_buckets`` only shapes COW merges; lineage records rows
+        written per bucket).
 
         If ``applied_range`` is already in the ledger this is a NO-OP
         (exactly-once replay; reference analog retry⇒DO NOTHING).
@@ -1519,45 +1522,6 @@ class SnapshotTable:
         "unchanged"), which every column mapping in
         ``functions/transformers.py`` is.
 
-        ``bucket_local_merge=True`` aligns the merge shuffle with the
-        TABLE'S OWN bucket layout: one explicit hash exchange on the
-        bucket column feeds both the LWW aggregate (grouping gains the
-        bucket column — a function of the first key, so groups are
-        unchanged — and the exchange's prefix satisfies the aggregate's
-        required distribution) and the per-bucket file write, replacing
-        the default's key-hash exchange + near-empty partial-agg pass +
-        second bucket exchange. The rationale is CLUSTER network volume
-        when in-batch duplicate density per partition is LOW (at 10^10
-        events over 10^9 keys a map-side combine reduces ~0%, so the
-        default pays a full-size key exchange AND a second winner-set
-        exchange over the wire); measured locally the two modes are
-        within noise of each other (local shuffles are memcpy — which
-        is why this is a knob, not a new default). Keep the default for
-        skewed/hot-key sources, where the combine collapses duplicates
-        before the wire and hot buckets would serialize into single
-        partitions. Final state is identical either way (tests assert
-        it).
-
-        ``late_materialize=True`` (raw sources, full images only) runs
-        the in-batch LWW over NARROW rows — (key, ts, lsn) — and
-        re-fetches winning payloads from the source scan via a
-        broadcast winner semi-join, instead of pushing every event's
-        full payload through the dedup shuffle. Wire math: with
-        duplicate multiplicity d (events per key per batch) and payload
-        width w >> key width k, the dedup exchange shrinks from
-        O(d·keys·w) to O(d·keys·k) and the payload crosses the network
-        once (keys·w in the merge exchange) instead of d times; the
-        source is scanned twice (columnar scans are the cheap part —
-        and the second scan prunes to key+payload columns). The winner
-        set (one (key, lsn) row per key) must fit in a broadcast, so
-        this is for micro/mini-batches up to ~10^7 DISTINCT keys per
-        commit — at bigger batch key-counts, or d ≈ 1 (no duplication
-        to elide), keep the default single-pass fold. Joining on
-        key+lsn (not lsn alone) keeps it correct even if lsn values
-        repeat across keys; exact-duplicate redeliveries of the winner
-        survive the semi-join and collapse in the (now tiny) merge
-        fold, same as the default path.
-
         ``source_is_raw=True`` is the engine fast path: the batch may
         hold many events per key and is not yet anonymized — the stats
         pre-pass then runs on the cheap raw scan (no UDFs), in-batch
@@ -1578,9 +1542,7 @@ class SnapshotTable:
         attempts. Exactly-once survives the race: if a concurrent
         writer applied this commit's ``applied_range`` first, the
         rebase detects it in the head's ledger and this call becomes a
-        no-op (orphaned files are GC-able). If a rebase kept
-        concurrently-added entries, the returned ``state`` is None even
-        under ``chain_state=True`` — the chained frame would miss them.
+        no-op (orphaned files are GC-able).
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}; use 'cow' or 'mor'")
@@ -1589,14 +1551,6 @@ class SnapshotTable:
             # "key-unique" batch has already destroyed the patches it
             # contained
             raise ValueError("patch_ops requires source_is_raw=True")
-        if target_df is not None and prune_buckets:
-            # a chained state must cover the WHOLE table: with pruning on,
-            # untouched buckets' file lists would be replaced by the
-            # (source-only) merge output, silently dropping committed rows
-            raise ValueError(
-                "target_df (chained state) requires prune_buckets=False — "
-                "the supplied state must cover every bucket"
-            )
         m = self.manifest(refresh=True)
         if applied_range is not None and self.is_applied(*applied_range):
             return CommitInfo(m["snapshot_id"], 0, 0, applied_range)
@@ -1609,28 +1563,72 @@ class SnapshotTable:
                 f"need op/lsn/ts + key columns {m['key_cols']}"
             )
 
-        key_cols = m["key_cols"]
-        nb = m["bucket_count"]
-        cur = self.current_schema(m)
-        payload_cols = [f.name for f in cur.fields]
-
         if debug_assert_unique and not source_is_raw:
             dup = (
-                batch.groupBy(*key_cols).count().filter(F.col("count") > 1).limit(1).collect()
+                batch.groupBy(*m["key_cols"]).count().filter(F.col("count") > 1).limit(1).collect()
             )
             if dup:
                 raise ValueError(
                     f"merge source is not key-unique (e.g. {tuple(dup[0])[:-1]}); "
                     "LWW-dedup the batch or pass source_is_raw=True"
                 )
+        try:
+            if mode == "mor":
+                written, n_src, sig = self.prepare_delta(
+                    batch, transform, source_is_raw, patch_ops
+                )
+                return self.commit_delta(
+                    written, applied_range, n_src, sig,
+                    lineage=lineage, on_conflict=on_conflict,
+                )
+            return self._merge_cow(
+                batch, m, applied_range, lineage, transform,
+                source_is_raw, prune_buckets, patch_ops, on_conflict,
+            )
+        except CommitConflictError:
+            if on_conflict != "retry" or _retry_budget <= 0:
+                raise
+            # recompute the whole merge from the new head (this
+            # attempt's files are orphans, GC-able)
+            return self.merge_cdc(
+                batch,
+                applied_range=applied_range,
+                lineage=lineage,
+                mode=mode,
+                transform=transform,
+                source_is_raw=source_is_raw,
+                prune_buckets=prune_buckets,
+                debug_assert_unique=debug_assert_unique,
+                patch_ops=patch_ops,
+                on_conflict="retry",
+                _retry_budget=_retry_budget - 1,
+            )
+
+    def _merge_cow(
+        self,
+        batch: DataFrame,
+        m: dict,
+        applied_range: tuple[int, int] | None,
+        lineage: bool,
+        transform,
+        source_is_raw: bool,
+        prune_buckets: bool,
+        patch_ops: bool,
+        on_conflict: str,
+    ) -> CommitInfo:
+        """The copy-on-write commit of ``merge_cdc``: bucket pre-pass,
+        one LWW shuffle over target + source rows of the affected
+        buckets, rewrite of those buckets. Raises CommitConflictError
+        when the commit cannot land (``merge_cdc`` owns the retry)."""
+        key_cols = m["key_cols"]
+        nb = m["bucket_count"]
+        cur = self.current_schema(m)
+        payload_cols = [f.name for f in cur.fields]
+
         src = batch.withColumn(_BUCKET_COL, bucket_expr(key_cols[0], nb))
         persisted = not source_is_raw
         if persisted:
             src = src.persist()
-        # pre-observe handle: the late-materialize winner build runs as
-        # its own (broadcast) job and must not re-fire the observe()
-        # metric the write job owns
-        src_plain = src
         observation = None
         try:
             if prune_buckets:
@@ -1657,171 +1655,96 @@ class SnapshotTable:
 
             s_side = self._source_side(src, cur, patch_ops=patch_ops)
 
-            if late_materialize and source_is_raw and not patch_ops:
-                # narrow in-batch LWW: only (key, ts, lsn) crosses the
-                # dedup exchange; winning payloads are re-fetched from
-                # a second (column-pruned) source scan by broadcast
-                # semi-join on key+lsn. See the docstring for the wire
-                # math and the key-count bound.
-                narrow = src_plain.select(
-                    *key_cols, "ts", F.col("lsn").cast("long").alias(_LSN_COL)
-                )
-                winners = lww_dedup(narrow, key_cols, ["ts", _LSN_COL])
-                s_side = s_side.join(
-                    F.broadcast(winners.select(*key_cols, _LSN_COL)),
-                    on=[*key_cols, _LSN_COL],
-                    how="left_semi",
-                )
-
-            if mode == "mor":
-                # delta write: LWW deferred to read/compact; raw batches
-                # are in-batch deduped so delta volume stays O(keys).
-                # Under patch_ops the batch is written RAW (no in-batch
-                # fold): folding a patch into a same-batch full image
-                # would freeze column provenance, making a LATER-batch
-                # but OLDER-ts full image unable to reclaim the columns
-                # it owns — keeping raw events means the read-time fold
-                # always sees the full history, so MoR patches are
-                # correct under arbitrary cross-batch ts disorder
-                # (stronger than the COW patch path, which folds at
-                # write and needs per-key in-order delivery).
-                won = s_side
-                if source_is_raw and not patch_ops:
-                    if bucket_local_merge:
-                        nop = (
-                            max(1, min(len(affected), 256))
-                            if affected is not None
-                            else max(1, min(nb, 256))
-                        )
-                        won = won.repartition(nop, F.col(_BUCKET_COL))
-                        won = lww_dedup(
-                            won, [_BUCKET_COL, *key_cols], ["ts", _LSN_COL]
-                        )
-                    else:
-                        won = lww_dedup(won, key_cols, ["ts", _LSN_COL])
-                if transform is not None:
-                    won = transform(won)
-            else:
-                # COW: read current rows of affected buckets and resolve
-                # LWW now — ONE shuffle covers in-batch dedup AND the
-                # target merge. Target rows keep their tombstone state;
-                # _src breaks exact (ts,_lsn) ties in favor of the
-                # incoming row (idempotent: identical payload).
-                if target_df is not None:
-                    # chained state from the previous commit (identical
-                    # to the written files; avoids re-scanning parquet)
-                    target = target_df
-                else:
-                    target = self.read(buckets=affected, internal=True).withColumn(
-                        _BUCKET_COL, bucket_expr(key_cols[0], nb)
-                    )
-                t_side = target.select(
-                    *payload_cols,
-                    F.col(_LSN_COL),
-                    F.col(_DELETED_COL).alias("_del"),
-                    F.lit(0).alias("_src"),
-                    F.col(_BUCKET_COL),
-                )
-                if patch_ops:
-                    # target rows are full images by construction
-                    t_side = t_side.withColumn("_patch", F.lit(False))
-                    if transform is not None:
-                        # transform RAW source events BEFORE the fold
-                        # (per event, like the MoR path): the fold's
-                        # winner row mixes target-derived columns —
-                        # already transformed at a prior commit — with
-                        # source values, so a post-fold whole-row
-                        # transform would double-transform the
-                        # untouched columns (f(f(x)) != f(x)). NULL
-                        # patch columns must stay NULL through the
-                        # transform (NULL = unchanged) — the engine's
-                        # column mappings are NULL-preserving.
-                        s_side = transform(s_side)
-                unioned = t_side.unionByName(s_side)
-                if bucket_local_merge and not patch_ops:
-                    nop = (
-                        max(1, min(len(affected), 256))
-                        if affected is not None
-                        else max(1, min(nb, 256))
-                    )
-                    unioned = unioned.repartition(nop, F.col(_BUCKET_COL))
-                if patch_ops:
-                    value_cols = [
-                        c for c in payload_cols
-                        if c not in key_cols and c != "ts"
-                    ]
-                    won = patch_fold(
-                        unioned, key_cols, ["ts", _LSN_COL, "_src"], value_cols
-                    )
-                elif bucket_local_merge:
-                    won = lww_dedup(
-                        unioned, [_BUCKET_COL, *key_cols], ["ts", _LSN_COL, "_src"]
-                    )
-                else:
-                    won = lww_dedup(unioned, key_cols, ["ts", _LSN_COL, "_src"])
-                if transform is not None and not patch_ops:
-                    # anonymize ONLY the winning source rows (target rows
-                    # were transformed when first applied). Preferred
-                    # plan: one conditional projection over the agg
-                    # output (engine.transform_batch(only_where=...)) —
-                    # a filter-split-union re-runs the LWW aggregation
-                    # once PER BRANCH (the shuffle is reused, the agg is
-                    # not). Fall back to the split for df→df transforms
-                    # that can't apply conditionally (Python-UDF
-                    # transformers, ad-hoc test callables) — unless the
-                    # target contributed nothing (bootstrap / bulk load
-                    # into empty buckets, known metadata-only): every
-                    # winner is then a source row and the transform
-                    # applies unconditionally in one pass, skipping the
-                    # duplicated aggregation entirely.
-                    target_empty = target_df is None and not any(
-                        m["files"].get(str(b))
-                        for b in (affected if affected is not None
-                                  else range(nb))
-                    )
-                    if target_empty:
-                        won = transform(won)
-                    else:
-                        cond_res = None
-                        try:
-                            cond_res = transform(
-                                won, only_where=F.col("_src") == 1
-                            )
-                        except TypeError:
-                            cond_res = None
-                        if cond_res is not None:
-                            won = cond_res
-                        else:
-                            new_rows = transform(won.filter(F.col("_src") == 1))
-                            kept_rows = won.filter(F.col("_src") != 1)
-                            won = new_rows.unionByName(kept_rows)
-
-            out = self._finalize_rows(
-                won, cur, key_cols,
-                include_patch=(patch_ops and mode == "mor"),
+            # read current rows of affected buckets and resolve LWW now
+            # — ONE shuffle covers in-batch dedup AND the target merge.
+            # Target rows keep their tombstone state; _src breaks exact
+            # (ts,_lsn) ties in favor of the incoming row (idempotent:
+            # identical payload).
+            target = self.read(buckets=affected, internal=True).withColumn(
+                _BUCKET_COL, bucket_expr(key_cols[0], nb)
             )
+            t_side = target.select(
+                *payload_cols,
+                F.col(_LSN_COL),
+                F.col(_DELETED_COL).alias("_del"),
+                F.lit(0).alias("_src"),
+                F.col(_BUCKET_COL),
+            )
+            if patch_ops:
+                # target rows are full images by construction
+                t_side = t_side.withColumn("_patch", F.lit(False))
+                if transform is not None:
+                    # transform RAW source events BEFORE the fold (per
+                    # event, like the MoR path): the fold's winner row
+                    # mixes target-derived columns — already transformed
+                    # at a prior commit — with source values, so a
+                    # post-fold whole-row transform would double-
+                    # transform the untouched columns (f(f(x)) != f(x)).
+                    # NULL patch columns must stay NULL through the
+                    # transform (NULL = unchanged) — the engine's column
+                    # mappings are NULL-preserving.
+                    s_side = transform(s_side)
+            unioned = t_side.unionByName(s_side)
+            if patch_ops:
+                value_cols = [
+                    c for c in payload_cols
+                    if c not in key_cols and c != "ts"
+                ]
+                won = patch_fold(
+                    unioned, key_cols, ["ts", _LSN_COL, "_src"], value_cols
+                )
+            else:
+                won = lww_dedup(unioned, key_cols, ["ts", _LSN_COL, "_src"])
+            if transform is not None and not patch_ops:
+                # anonymize ONLY the winning source rows (target rows
+                # were transformed when first applied). Preferred plan:
+                # one conditional projection over the agg output
+                # (engine.transform_batch(only_where=...)) — a filter-
+                # split-union re-runs the LWW aggregation once PER
+                # BRANCH (the shuffle is reused, the agg is not). Fall
+                # back to the split for df→df transforms that can't
+                # apply conditionally (df-level hooks, ad-hoc test
+                # callables) — unless
+                # the target contributed nothing (bootstrap / bulk load
+                # into empty buckets, known metadata-only): every winner
+                # is then a source row and the transform applies
+                # unconditionally in one pass, skipping the duplicated
+                # aggregation entirely.
+                target_empty = not any(
+                    m["files"].get(str(b))
+                    for b in (affected if affected is not None else range(nb))
+                )
+                if target_empty:
+                    won = transform(won)
+                else:
+                    cond_res = None
+                    try:
+                        cond_res = transform(
+                            won, only_where=F.col("_src") == 1
+                        )
+                    except TypeError:
+                        cond_res = None
+                    if cond_res is not None:
+                        won = cond_res
+                    else:
+                        new_rows = transform(won.filter(F.col("_src") == 1))
+                        kept_rows = won.filter(F.col("_src") != 1)
+                        won = new_rows.unionByName(kept_rows)
+
+            out = self._finalize_rows(won, cur, key_cols)
 
             new_sid = self._next_snapshot_id()
             commit_dir = os.path.join(
                 self.path, "data", f"commit-{new_sid}-{uuid.uuid4().hex[:8]}"
             )
-            already_bucket_partitioned = bucket_local_merge and not patch_ops
-            if not already_bucket_partitioned:
-                # exact bucket→partition routing (no multinomial
-                # collisions / empty write slots — see bucket_routed)
-                w_buckets = affected if affected is not None else range(nb)
-                out = bucket_routed(
-                    out, w_buckets, 256, bucket_col=_BUCKET_COL
-                )
-            if chain_state:
-                out = out.persist()
+            # exact bucket→partition routing (no multinomial collisions /
+            # empty write slots — see bucket_routed)
+            w_buckets = affected if affected is not None else range(nb)
+            out = bucket_routed(out, w_buckets, 256, bucket_col=_BUCKET_COL)
             out.write.partitionBy(_BUCKET_COL).parquet(commit_dir)
 
             written = self._list_commit_files(commit_dir)
             footers = self._read_footers(written, self.spark)
-            fstats = self._collect_file_stats(
-                written, self._stats_cols(m), footers
-            )
             if affected is None:  # no-prepass mode: stats post-hoc
                 affected = sorted(written)
                 got = observation_metrics(observation)
@@ -1829,56 +1752,24 @@ class SnapshotTable:
                 # recompute over the micro-batch source
                 n_src = int(got["n_src"]) if got else src.count()
                 bucket_counts = self._footer_counts(written, footers)
-            bmap = self._annotate_blooms(m, new_sid, written)
-            patch_paths = self._patch_paths(footers)
-            rmap = self._row_count_entries(written, footers)
-
-            def _fentry(p: str, kind: str | None = None) -> dict:
-                e = {"path": p, "schema_id": m["schema_id"], **rmap.get(p, {})}
-                # fresh data is written by the CURRENT anonymization
-                # policy (the engine's transforms run inside this merge)
-                if int(m.get("transform_version", 0)):
-                    e["tv"] = int(m["transform_version"])
-                if kind:
-                    e["kind"] = kind
-                if p in fstats:
-                    e["stats"] = fstats[p]
-                if p in bmap:
-                    e["bloom"] = bmap[p]
-                if p in patch_paths:
-                    e["patches"] = True
-                return e
 
             # own_entries / replaced_paths drive BOTH the normal manifest
             # build and a conflict rebase (_rebase_manifest)
-            own_entries: dict[str, list[dict]] = {}
-            replaced: dict[str, set[str]] | None = None
-            if mode == "mor":
-                for b, paths in written.items():
-                    own_entries[str(b)] = [_fentry(p, "delta") for p in sorted(paths)]
-            else:
-                rewritten = affected if prune_buckets else [
-                    int(b) for b in m["files"]
-                ]
-                for b in rewritten:
-                    own_entries[str(b)] = []
-                for b, paths in written.items():
-                    own_entries[str(b)] = [_fentry(p) for p in sorted(paths)]
-                replaced = {
-                    str(b): {e["path"] for e in m["files"].get(str(b), [])}
-                    for b in rewritten
-                }
-
+            rewritten = affected if prune_buckets else [int(b) for b in m["files"]]
+            own_entries = {str(b): [] for b in rewritten}
+            own_entries.update(
+                self._file_entries(m, new_sid, written, footers, m["schema_id"])
+            )
+            replaced = {
+                str(b): {e["path"] for e in m["files"].get(str(b), [])}
+                for b in rewritten
+            }
             new_files = {b: list(v) for b, v in m["files"].items()}
-            if mode == "mor":
-                for b, ents in own_entries.items():
-                    new_files.setdefault(b, []).extend(ents)
-            else:
-                for b in replaced:
-                    new_files.pop(b, None)
-                for b, ents in own_entries.items():
-                    if ents:
-                        new_files[b] = ents
+            for b in replaced:
+                new_files.pop(b, None)
+            for b, ents in own_entries.items():
+                if ents:
+                    new_files[b] = ents
 
             ledger = list(m["checkpoint"]["applied"])
             ledger_row = None
@@ -1895,63 +1786,25 @@ class SnapshotTable:
                 "files": new_files,
                 "checkpoint": {**m["checkpoint"], "applied": ledger},
                 "summary": {
-                    "operation": f"merge_{mode}",
+                    "operation": "merge_cow",
                     "source_rows": n_src,
                     "buckets_rewritten": len(affected),
                 },
             }
-
-            try:
-                committed, noop = self._commit_manifest(
-                    new_m,
-                    on_conflict="rebase" if on_conflict == "retry" else on_conflict,
-                    kind="append" if mode == "mor" else "rewrite",
-                    own_entries=own_entries,
-                    replaced_paths=replaced,
-                    ledger_row=ledger_row,
-                )
-            except CommitConflictError:
-                if on_conflict != "retry" or _retry_budget <= 0:
-                    raise
-                # recompute the whole merge from the new head (this
-                # attempt's files are orphans, GC-able)
-                if chain_state:
-                    out.unpersist()
-                if persisted:
-                    src.unpersist()
-                    persisted = False
-                return self.merge_cdc(
-                    batch,
-                    applied_range=applied_range,
-                    lineage=lineage,
-                    mode=mode,
-                    transform=transform,
-                    source_is_raw=source_is_raw,
-                    prune_buckets=prune_buckets,
-                    target_df=None,  # stale by definition after a conflict
-                    chain_state=chain_state,
-                    debug_assert_unique=debug_assert_unique,
-                    patch_ops=patch_ops,
-                    bucket_local_merge=bucket_local_merge,
-                    late_materialize=late_materialize,
-                    on_conflict="retry",
-                    _retry_budget=_retry_budget - 1,
-                )
-            rebased = committed["snapshot_id"] != new_sid
-            if chain_state and (noop or rebased):
-                out.unpersist()  # chained state is stale after a rebase
+            committed, noop = self._commit_manifest(
+                new_m,
+                on_conflict="rebase" if on_conflict == "retry" else on_conflict,
+                kind="rewrite",
+                own_entries=own_entries,
+                replaced_paths=replaced,
+                ledger_row=ledger_row,
+            )
             if noop:
                 return CommitInfo(committed["snapshot_id"], 0, 0, applied_range)
             final_sid = committed["snapshot_id"]
             if lineage:
                 self._write_lineage(bucket_counts, final_sid, applied_range)
-            return CommitInfo(
-                final_sid,
-                n_src,
-                len(affected),
-                applied_range,
-                state=out if chain_state and not rebased else None,
-            )
+            return CommitInfo(final_sid, n_src, len(affected), applied_range)
         finally:
             if persisted:
                 src.unpersist()
@@ -2014,7 +1867,7 @@ class SnapshotTable:
             F.col(_BUCKET_COL),
         )
 
-    # ---------- pipelined MoR commits ----------
+    # ---------- MoR delta commits (merge_cdc mode='mor', pipelined) ----------
 
     def prepare_delta(
         self,
@@ -2022,14 +1875,14 @@ class SnapshotTable:
         transform=None,
         source_is_raw: bool = True,
         patch_ops: bool = False,
-    ) -> tuple[dict[int, list[str]], int, tuple[int, int]]:
+    ) -> tuple[dict[int, list[str]], int, tuple[int, int, int]]:
         """Data-plane of a MoR delta commit WITHOUT the manifest write:
         in-batch LWW dedup + transform + bucket-partitioned delta file
         write to a fresh directory. Touches no shared table state, so
         disjoint lsn ranges can run CONCURRENTLY (pipelined commits);
         ``commit_delta`` serializes the metadata afterwards. Returns
         (written files per bucket, source row count, (schema_id,
-        bucket_count) the files were written under)."""
+        bucket_count, snapshot_id) the files were written under)."""
         from pyspark.sql import Observation
 
         m = self.manifest(refresh=True)
@@ -2048,7 +1901,15 @@ class SnapshotTable:
         src = src.observe(obs, F.count(F.lit(1)).alias("n_src"))
         won = self._source_side(src, cur, patch_ops=patch_ops)
         if source_is_raw and not patch_ops:
-            # patch batches stay RAW (see merge_cdc's MoR patch note)
+            # raw batches are in-batch deduped so delta volume stays
+            # O(keys). Patch batches are written RAW: folding a patch
+            # into a same-batch full image would freeze column
+            # provenance, making a LATER-batch but OLDER-ts full image
+            # unable to reclaim the columns it owns — keeping raw events
+            # means the read-time fold always sees the full history, so
+            # MoR patches are correct under arbitrary cross-batch ts
+            # disorder (stronger than the COW patch path, which folds at
+            # write and needs per-key in-order delivery).
             won = lww_dedup(won, key_cols, ["ts", _LSN_COL])
         if transform is not None:
             won = transform(won)
@@ -2060,32 +1921,35 @@ class SnapshotTable:
         written = self._list_commit_files(commit_dir)
         got = observation_metrics(obs)
         n_src = int(got["n_src"]) if got else src.count()
-        return written, n_src, (m["schema_id"], nb)
+        return written, n_src, (m["schema_id"], nb, m["snapshot_id"])
 
     def commit_delta(
         self,
         written: dict[int, list[str]],
         applied_range: tuple[int, int] | None,
         n_src: int,
-        schema_id: "int | tuple[int, int]",
+        schema_id: "int | tuple[int, int, int]",
         lineage: bool = True,
         on_conflict: str = "fail",
     ) -> CommitInfo:
-        """Metadata half of a pipelined MoR commit: register the delta
-        files + ledger range atomically. With the default
-        ``on_conflict='fail'`` it must be called in lsn order (single
-        writer); ``'rebase'`` lets concurrent pipelined writers land in
-        any order — a pure delta append is always metadata-rebaseable
+        """Metadata half of a MoR delta commit (``merge_cdc(mode='mor')``
+        and pipelined replay): register the delta files + ledger range
+        atomically. With the default ``on_conflict='fail'`` it must be
+        called in lsn order (single writer); ``'rebase'`` lets
+        concurrent pipelined writers land in any order — a pure delta append is always metadata-rebaseable
         across data-plane commits (read-time LWW orders by (ts, lsn),
         not by commit order), and a duplicate applied_range becomes a
         no-op. A crash before this point leaves orphan files only — the
-        range is not in the ledger, so replay re-does it."""
+        range is not in the ledger, so replay re-does it. ``schema_id``
+        is ``prepare_delta``'s token: a structural commit (purge,
+        rescale, alter, rollback) landing while the delta was in flight
+        raises CommitConflictError."""
         m = self.manifest(refresh=True)
         if applied_range is not None and self.is_applied(*applied_range):
             return CommitInfo(m["snapshot_id"], 0, 0, applied_range)
-        bucket_count = None
+        bucket_count = prepared_at = None
         if isinstance(schema_id, tuple):
-            schema_id, bucket_count = schema_id
+            schema_id, bucket_count, prepared_at = schema_id
         if schema_id != m["schema_id"]:
             raise CommitConflictError(
                 f"schema advanced ({schema_id} -> {m['schema_id']}) while the "
@@ -2097,28 +1961,17 @@ class SnapshotTable:
                 f"{m['bucket_count']}) while the delta was in flight — "
                 "the files are bucketed under the old layout; re-prepare"
             )
+        if prepared_at is not None:
+            self._check_data_plane_since(m, prepared_at)
         new_sid = self._next_snapshot_id()
-        new_files = {b: list(v) for b, v in m["files"].items()}
         footers = self._read_footers(written, self.spark)
-        fstats = self._collect_file_stats(written, self._stats_cols(m), footers)
         # bloom build launches one Spark job inside the serialized
         # metadata step; with pipelined commits prefer building it in
         # the data plane if it ever dominates — gated on bloom_cols
-        bmap = self._annotate_blooms(m, new_sid, written)
-        patch_paths = self._patch_paths(footers)
-        rmap = self._row_count_entries(written, footers)
-        own_entries: dict[str, list[dict]] = {}
-        for b, paths in written.items():
-            own_entries[str(b)] = [
-                {"path": p, "schema_id": schema_id, "kind": "delta",
-                 **rmap.get(p, {}),
-                 **({"tv": int(m["transform_version"])}
-                    if int(m.get("transform_version", 0)) else {}),
-                 **({"stats": fstats[p]} if p in fstats else {}),
-                 **({"bloom": bmap[p]} if p in bmap else {}),
-                 **({"patches": True} if p in patch_paths else {})}
-                for p in sorted(paths)
-            ]
+        own_entries = self._file_entries(
+            m, new_sid, written, footers, schema_id, kind="delta"
+        )
+        new_files = {b: list(v) for b, v in m["files"].items()}
         for b, ents in own_entries.items():
             new_files.setdefault(b, []).extend(ents)
         ledger = list(m["checkpoint"]["applied"])
@@ -2135,7 +1988,7 @@ class SnapshotTable:
             "files": new_files,
             "checkpoint": {**m["checkpoint"], "applied": ledger},
             "summary": {
-                "operation": "merge_mor_pipelined",
+                "operation": "merge_mor",
                 "source_rows": n_src,
                 "buckets_rewritten": len(written),
             },
@@ -2158,6 +2011,44 @@ class SnapshotTable:
         return CommitInfo(
             committed["snapshot_id"], n_src, len(written), applied_range
         )
+
+    def _file_entries(
+        self,
+        m: dict,
+        sid: int,
+        written: dict[int, list[str]],
+        footers: dict[str, object],
+        schema_id: int,
+        kind: str | None = None,
+    ) -> dict[str, list[dict]]:
+        """Manifest entries per bucket for a commit's freshly written
+        files: row counts, column stats, bloom sidecars and the patch
+        marker, all from the footers. Fresh data is written by the
+        CURRENT anonymization policy (the engine's transforms run inside
+        the commit), so entries carry the table's transform version."""
+        fstats = self._collect_file_stats(written, self._stats_cols(m), footers)
+        bmap = self._annotate_blooms(m, sid, written)
+        patch_paths = self._patch_paths(footers)
+        rmap = self._row_count_entries(written, footers)
+        tv = int(m.get("transform_version", 0))
+        out: dict[str, list[dict]] = {}
+        for b, paths in written.items():
+            ents = []
+            for p in sorted(paths):
+                e = {"path": p, "schema_id": schema_id, **rmap.get(p, {})}
+                if tv:
+                    e["tv"] = tv
+                if kind:
+                    e["kind"] = kind
+                if p in fstats:
+                    e["stats"] = fstats[p]
+                if p in bmap:
+                    e["bloom"] = bmap[p]
+                if p in patch_paths:
+                    e["patches"] = True
+                ents.append(e)
+            out[str(b)] = ents
+        return out
 
     def _stats_cols(self, m: dict) -> list[str]:
         return m.get(

@@ -74,7 +74,6 @@ def merge_agg(
     applied_range: tuple[int, int] | None = None,
     on_conflict: str = "fail",
     prune_buckets: bool = True,
-    bucket_local_merge: bool = False,
 ) -> CommitInfo:
     """Fold a batch of increment events into ``table``'s accumulators.
 
@@ -174,5 +173,4 @@ def merge_agg(
         events, applied_range=applied_range, lineage=False,
         on_conflict=on_conflict,
         prune_buckets=prune_buckets,
-        bucket_local_merge=bucket_local_merge,
     )

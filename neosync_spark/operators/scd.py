@@ -131,7 +131,6 @@ def scd2_sync(
     op_col: str = "op",
     delete_op: str = "delete",
     prune_buckets: bool = True,
-    bucket_local_merge: bool = False,
 ):
     """One incremental epoch of SCD2 dimension maintenance — the
     versioned-history twin of `incremental_rollup_sync` (state
@@ -267,15 +266,13 @@ def scd2_sync(
         .withColumn("lsn", F.lit(ordinal).cast("long"))
         .withColumn("op", F.lit("insert"))
     )
-    # prune_buckets/bucket_local_merge pass through to the merge: the
-    # defaults are right for key-local epochs (pruned dimension read);
-    # a caller replaying a uniform-key log opts out of the pre-pass and
-    # keeps the version write on one bucket-aligned exchange
+    # prune_buckets passes through to the merge: the default is right
+    # for key-local epochs (pruned dimension read); a caller replaying
+    # a uniform-key log opts out of the pre-pass
     return dst.merge_cdc(
         batch,
         applied_range=applied_range,
         prune_buckets=prune_buckets,
-        bucket_local_merge=bucket_local_merge,
     )
 
 

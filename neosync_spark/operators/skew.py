@@ -1,49 +1,19 @@
-"""Explicit hot-key handling for the conv_id-partitioned stages.
+"""Hot-key diagnostics for the conv_id-partitioned stages.
 
 The reference has no skew handling (hot tables just run longer —
-SURVEY.md §4). At 10^10 events the transform + merge stages must not
-let one giant conversation pin a single task, so:
-
-* ``salted_repartition`` — repartition on (hash(conv_id), salt) where
-  salt fans out only rows, not semantics: used before the pandas-UDF
-  transform stage, where work is row-local and any partitioning is
-  correct. This is the "salted-hash repartition on conv_id with
-  hot-conversation skew splitting" stage of the north star.
-* ``hot_keys`` — conversation-size stats to pick the hot set
-  explicitly (top-k by event count), for diagnostics / targeted
-  fan-out factor.
-
-Key-grouped stages (LWW, merge) do NOT need salting here because the
-agg-based LWW gets map-side partial combine (see operators/dedup.py)
-and the merge joins on the finer (conv_id, turn_idx) key; AQE skew-join
-splitting covers the residual.
+SURVEY.md §4). At 10^10 events the merge must not let one giant
+conversation pin a single task. Key-grouped stages (LWW, merge) need no
+salting because the agg-based LWW gets map-side partial combine (see
+operators/dedup.py) and the merge groups on the finer (conv_id,
+turn_idx) key; AQE skew-join splitting covers the residual.
+``hot_keys`` reports conversation sizes (top-k by event count) to
+confirm that on a given log.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_repartition(
-    df: DataFrame,
-    key_col: str = "conv_id",
-    num_partitions: int | None = None,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Hash-repartition on (key, salt) so hot keys split across tasks.
-
-    Correct for any row-local stage (transformers are pure functions of
-    (seed, key, value) — partition placement never changes output).
-    """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(key_col), F.monotonically_increasing_id()), F.lit(salt_buckets))
-    )
-    if num_partitions:
-        out = salted.repartition(num_partitions, F.col(key_col), F.col("_salt"))
-    else:
-        out = salted.repartition(F.col(key_col), F.col("_salt"))
-    return out.drop("_salt")
 
 
 def hot_keys(df: DataFrame, key_col: str = "conv_id", top_n: int = 100) -> DataFrame:

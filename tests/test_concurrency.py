@@ -267,6 +267,72 @@ class TestStructuralConflicts:
                 on_conflict="rebase",
             )
 
+    @pytest.mark.parametrize("structural", ["purge", "alter"])
+    def test_mor_retry_recomputes_after_structural_commit(
+        self, spark, structural
+    ):
+        # merge_cdc(mode='mor') commits through prepare_delta +
+        # commit_delta; a structural commit racing the manifest write
+        # refuses the rebase, and 'retry' re-prepares from the new head
+        import pyspark.sql.types as T
+
+        path, t0 = _fresh(spark)
+        a = _events(spark, 0, 40, "convA")
+        t0.merge_cdc(a, applied_range=(0, 40), source_is_raw=True)
+        t1 = SnapshotTable.load(spark, path)
+        t2 = SnapshotTable.load(spark, path)
+        wider = T.StructType(
+            list(transcript_schema().fields)
+            + [T.StructField("extra", T.StringType(), True)]
+        )
+
+        def concurrent(t):
+            if structural == "purge":
+                t.purge_keys(["convA-0"], expire=False)
+            else:
+                t.alter_schema(wider)
+
+        b = _events(spark, 500, 540, "convB")
+        t2._pre_commit_hook = lambda: concurrent(t1)
+        ci = t2.merge_cdc(
+            b, applied_range=(500, 540), source_is_raw=True, mode="mor",
+            on_conflict="retry",
+        )
+        assert ci.rows_written == 40
+        m = t2.manifest(refresh=True)
+        assert {(r[0], r[1]) for r in m["checkpoint"]["applied"]} == {
+            (0, 40), (500, 540)
+        }
+        assert m["summary"]["operation"] == "merge_mor"
+        deltas = [
+            e for es in m["files"].values() for e in es
+            if e.get("kind") == "delta"
+        ]
+        assert deltas and all(e["schema_id"] == m["schema_id"] for e in deltas)
+
+        _, tc = _fresh(spark)
+        tc.merge_cdc(a, applied_range=(0, 40), source_is_raw=True)
+        concurrent(tc)
+        tc.merge_cdc(
+            b, applied_range=(500, 540), source_is_raw=True, mode="mor"
+        )
+        assert _state(t2) == _state(tc)
+
+    def test_commit_delta_refuses_structural_commit_in_flight(self, spark):
+        # a purge landing between the delta's data plane and its commit
+        # is caught by the prepare token, not silently absorbed
+        path, t0 = _fresh(spark)
+        t0.merge_cdc(
+            _events(spark, 0, 40, "convA"), applied_range=(0, 40),
+            source_is_raw=True,
+        )
+        written, n_src, token = t0.prepare_delta(
+            _events(spark, 500, 540, "convA")
+        )
+        SnapshotTable.load(spark, path).purge_keys(["convA-0"], expire=False)
+        with pytest.raises(CommitConflictError, match="structural"):
+            t0.commit_delta(written, (500, 540), n_src, token)
+
 
 class TestCompactRebase:
     def test_compact_keeps_concurrent_delta(self, spark):

@@ -31,14 +31,14 @@ def log_path(spark, tmp_path_factory):
     return p
 
 
-def _engine(spark, tmp_path, transforms=None, batch=2500, salt=None):
+def _engine(spark, tmp_path, transforms=None, batch=2500):
     t = SnapshotTable.create(
         spark, str(tmp_path / "transcripts"), transcript_schema(),
         key_cols=KEY_COLS, n_buckets=8,
     )
     return ReplayEngine(
         spark, t, transforms=transforms,
-        config=EngineConfig(batch_lsn_size=batch, salt_partitions=salt),
+        config=EngineConfig(batch_lsn_size=batch),
     )
 
 
@@ -62,7 +62,7 @@ def test_replay_with_transforms_matches_oracle(spark, tmp_path, log_path):
         "text": X.transform_pii_text(seed=7, deny_words=("lorem",)),
         "tool": X.transform_character_scramble(seed=7, user_provided_regex=r'"q":"[^"]*"'),
     }
-    eng = _engine(spark, tmp_path, transforms=transforms, salt=8)
+    eng = _engine(spark, tmp_path, transforms=transforms)
     stats = eng.replay(ChangeLogSource(spark, log_path))
     assert stats.rows_applied > 0
 
@@ -125,18 +125,6 @@ def test_replay_batch_size_invariance(spark, tmp_path, log_path):
         big.table.read().toPandas(),
         ["conv_id", "turn_idx"],
     )
-
-
-def test_replay_chained_state_matches_oracle(spark, tmp_path, log_path):
-    """chain_state=True reuses the persisted post-commit state as the
-    next merge's target — must be byte-equivalent to re-reading."""
-    eng = _engine(spark, tmp_path, batch=2500)
-    eng.config.prune_buckets = False
-    eng.config.chain_state = True
-    eng.replay(ChangeLogSource(spark, log_path))
-    got = eng.table.read().toPandas()
-    exp = expected_final_state(generate_pandas(CFG))
-    assert_pdf_equal(got, exp, ["conv_id", "turn_idx"])
 
 
 def test_transform_applies_exactly_once_across_bootstrap_and_update(

@@ -684,114 +684,10 @@ def test_replace_where_empty_new_rows_deletes_region(spark, tmp_path):
     assert got == [("c1", 0)]
 
 
-def test_bucket_local_merge_equals_default(spark, tmp_path):
-    """bucket_local_merge aligns the merge shuffle with the table's
-    bucket layout — final state must be identical to the default
-    key-hash merge, the plan must contain exactly ONE exchange (the
-    bucket repartition satisfies the aggregate's required distribution
-    via its grouping prefix), and the per-bucket file layout holds."""
-    from neosync_spark.engine import EngineConfig, ReplayEngine
-    from neosync_spark.schema import KEY_COLS, transcript_schema
-    from neosync_spark.sources.changelog import ChangeLogSource
-    from neosync_spark.synth import SynthConfig, generate_pandas
-
-    log = generate_pandas(SynthConfig(n_events=6000, n_convs=120))
-    sdf = spark.createDataFrame(log)
-    log_dir = str(tmp_path / "log")
-    sdf.write.parquet(log_dir)
-
-    outs = {}
-    for flag in (False, True):
-        t = SnapshotTable.create(
-            spark, str(tmp_path / f"t{flag}"), transcript_schema(),
-            key_cols=KEY_COLS, n_buckets=8,
-        )
-        eng = ReplayEngine(
-            spark, t,
-            config=EngineConfig(
-                batch_lsn_size=2500, lineage=False,
-                bucket_local_merge=flag,
-            ),
-        )
-        eng.replay(ChangeLogSource(spark, log_dir))
-        outs[flag] = sorted(
-            tuple(r) for r in t.read().select(
-                "conv_id", "turn_idx", "role", "text", "tool"
-            ).collect()
-        )
-        if flag:
-            # every bucket dir holds files; bucket pruning still works
-            got = t.read(key_equals={"conv_id": log["conv_id"].iloc[0]})
-            assert got.count() >= 1
-    assert outs[False] == outs[True]
-
-
-def test_bucket_local_merge_single_exchange_plan(spark, tmp_path):
-    """The merge's winner computation plans ONE Exchange when grouped
-    (bucket, key...) on a bucket-repartitioned union — the physical
-    contract bucket_local_merge relies on."""
-    from pyspark.sql import functions as F
-
-    from neosync_spark.lakehouse import bucket_expr
-    from neosync_spark.operators.dedup import lww_dedup
-
-    df = spark.createDataFrame(
-        [(f"c{i%7}", i % 3, i, float(i)) for i in range(100)],
-        "conv_id string, turn_idx int, lsn long, v double",
-    ).withColumn("_b", bucket_expr("conv_id", 8))
-    pre = df.repartition(8, F.col("_b"))
-    won = lww_dedup(pre, ["_b", "conv_id", "turn_idx"], ["lsn"])
-    plan = won._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1
-
-
-def test_late_materialize_equals_default(spark, tmp_path):
-    """late_materialize (narrow in-batch LWW + broadcast winner
-    semi-join; payload crosses the wire once instead of per duplicate)
-    must produce the identical final state as the default single-pass
-    fold, in BOTH commit modes, with transforms applied to the same
-    winning rows. Multi-batch so the COW path also folds against a
-    non-empty target."""
-    from neosync_spark.engine import EngineConfig, ReplayEngine
-    from neosync_spark.functions import transformers as X
-    from neosync_spark.schema import KEY_COLS, transcript_schema
-    from neosync_spark.sources.changelog import ChangeLogSource
-    from neosync_spark.synth import SynthConfig, generate_pandas
-
-    log = generate_pandas(SynthConfig(n_events=6000, n_convs=120))
-    log_dir = str(tmp_path / "log")
-    spark.createDataFrame(log).write.parquet(log_dir)
-
-    for mode in ("cow", "mor"):
-        outs = {}
-        for flag in (False, True):
-            t = SnapshotTable.create(
-                spark, str(tmp_path / f"lm_{mode}_{flag}"),
-                transcript_schema(), key_cols=KEY_COLS, n_buckets=8,
-            )
-            eng = ReplayEngine(
-                spark, t,
-                transforms={"text": X.transform_email(seed=7)},
-                config=EngineConfig(
-                    batch_lsn_size=2500, lineage=False,
-                    merge_mode=mode, late_materialize=flag,
-                ),
-            )
-            eng.replay(ChangeLogSource(spark, log_dir))
-            outs[flag] = sorted(
-                tuple(r) for r in t.read().select(
-                    "conv_id", "turn_idx", "role", "text", "tool"
-                ).collect()
-            )
-        assert outs[False] == outs[True], f"state diverged under {mode}"
-
-
-def test_late_materialize_ignored_for_patch_ops(spark, tmp_path):
-    """patch_ops needs every raw event (a patch that loses the
-    in-batch LWW still contributes its columns) — late_materialize
-    must not thin the source there. Guarded by the and-not-patch_ops
-    condition; this asserts patch folding stays correct with the flag
-    set."""
+def test_in_batch_patch_fold(spark, tmp_path):
+    """patch_ops needs every raw event of a batch: a patch that loses
+    the in-batch LWW still contributes its columns, so one COW merge of
+    a full image + two patches of the same key folds all three."""
     import datetime
 
     from neosync_spark.schema import KEY_COLS, transcript_schema
@@ -812,7 +708,7 @@ def test_late_materialize_ignored_for_patch_ops(spark, tmp_path):
     )
     t.merge_cdc(
         batch, applied_range=(1, 4), source_is_raw=True,
-        patch_ops=True, late_materialize=True, lineage=False,
+        patch_ops=True, lineage=False,
     )
     got = t.read().select("role", "text", "tool").collect()
     assert [tuple(r) for r in got] == [("user", "world", '{"name":"t"}')]

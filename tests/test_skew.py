@@ -7,7 +7,7 @@ import numpy as np
 import pandas as pd
 
 from neosync_spark.operators.dedup import lww_dedup
-from neosync_spark.operators.skew import hot_keys, salted_repartition
+from neosync_spark.operators.skew import hot_keys
 
 
 def _skewed_log(n_hot=100_000, n_cold=10_000):
@@ -45,24 +45,6 @@ def test_hot_keys_diagnostic(spark):
     top = hot_keys(sdf, "conv_id", top_n=1).collect()
     assert top[0]["conv_id"] == "conv-hot"
     assert top[0]["n_events"] == 5000
-
-
-def test_salted_repartition_splits_hot_conv(spark):
-    """The pre-transform salting must spread a hot conversation across
-    multiple partitions (row-local stages only)."""
-    import pyspark.sql.functions as F
-
-    log = _skewed_log(n_hot=20_000, n_cold=0)
-    sdf = spark.createDataFrame(log)
-    salted = salted_repartition(sdf, "conv_id", num_partitions=8, salt_buckets=8)
-    dist = (
-        salted.withColumn("p", F.spark_partition_id())
-        .groupBy("p")
-        .count()
-        .toPandas()
-    )
-    assert len(dist) >= 4  # hot conv spread over several partitions
-    assert dist["count"].max() < 20_000
 
 
 class TestSubsetMultiRootComposite:

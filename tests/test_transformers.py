@@ -18,14 +18,29 @@ def v(*vals):
     return pd.Series(list(vals), dtype=object)
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        n for n in X.REGISTRY
+        if n.startswith("transform_") or n in ("null", "passthrough")
+    ],
+)
+def test_all_null_series_stays_null(name):
+    """Every value transformer is NULL-preserving with its default
+    parameters: an all-NULL input comes back all NULL, without raising.
+    The merge's conditional transform relies on it (masked rows reach a
+    Python-UDF transformer as NULL and must come back NULL), and so do
+    patch events, where NULL means "unchanged"."""
+    fn = X.REGISTRY[name]()
+    out = fn(v(None, None, None), k("a", "b", "c"))
+    assert len(out) == 3
+    assert out.isna().all(), out.tolist()
+
+
 class TestTransformEmail:
     def test_empty_is_null(self):
         fn = X.transform_email()
         assert fn(v(""), k("a")).tolist() == [None]
-
-    def test_null_passthrough(self):
-        fn = X.transform_email()
-        assert fn(v(None), k("a")).tolist() == [None]
 
     def test_preserve_domain(self):
         fn = X.transform_email(preserve_domain=True)
@@ -341,7 +356,7 @@ def test_transform_user_code_sandbox_rejects_escapes():
             X.transform_user_code(bad)
 
 
-def test_merge_cdc_rejects_chained_state_with_pruning(spark, tmp_path):
+def test_merge_cdc_rejects_invalid_options(spark, tmp_path):
     from neosync_spark.lakehouse import SnapshotTable
     from neosync_spark.schema import KEY_COLS, transcript_schema
     import pytest as _pytest
@@ -354,8 +369,13 @@ def test_merge_cdc_rejects_chained_state_with_pruning(spark, tmp_path):
     df = spark.createDataFrame([], t.current_schema()).withColumns(
         {"op": F.lit("insert"), "lsn": F.lit(0).cast("long")}
     )
-    with _pytest.raises(ValueError, match="prune_buckets"):
-        t.merge_cdc(df, target_df=df, prune_buckets=True)
+    with _pytest.raises(ValueError, match="unknown merge mode"):
+        t.merge_cdc(df, mode="append")
+    with _pytest.raises(ValueError, match="patch_ops requires source_is_raw"):
+        t.merge_cdc(df, patch_ops=True)
+    with _pytest.raises(ValueError, match="missing required columns"):
+        t.merge_cdc(df.drop("lsn"))
+    assert t.manifest(refresh=True)["snapshot_id"] == 0
 
 
 def test_pii_text_column_expr_matches_pandas(spark):
